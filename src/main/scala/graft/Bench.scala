@@ -2,89 +2,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // shuffle/spill scratch: overridable so a RAM-backed dir
-    // (/dev/shm) can take the block-manager writes off the /tmp disk;
-    // default stays the JVM tmpdir
-    val localDir = sys.env.get("SPARK_GRAFT_LOCAL_DIR")
-    val b0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-    // stream-drain checkpoints on RAM when the host has it: the
-    // offset/commit WAL fsyncs per micro-batch and /tmp is
-    // disk-backed here (~100 ms/drain measured by StreamFloorProbe);
-    // durability across JVMs is meaningless for these
-    // drain-to-completion harness streams
-    val b1 =
-      if (new java.io.File("/dev/shm").isDirectory)
-        b0.config("spark.graft.stream.checkpointDir", "/dev/shm/graft_ckpt")
-      else b0
-    val spark = localDir.fold(b1)(d => b1.config("spark.local.dir", d))
-      // the whole-stage-codegen compile cache defaults to 100 entries;
-      // ~195 queries × several codegen stages evict it within one
-      // sweep, so the spaced-sweep min would re-pay janino compilation
-      // (~0.2-0.5 s/query) in EVERY sweep — back-to-back passes hid
-      // that by re-running while still cached. Sized to hold the whole
-      // battery so the min measures plan execution, not recompilation.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // the streaming drains' stop() emits benign "Failed to cancel job
-    // group" WARN pairs from DAGScheduler at teardown; they land in
-    // the harness's ~2KB log tail and can push the bench JSON line out
-    // of it, so pin that one logger to ERROR for the bench run
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.scheduler.DAGScheduler",
-      org.apache.logging.log4j.Level.ERROR)
-    // same treatment for the streaming runtime (ResolveWriteToStream's
-    // AQE notice, MicroBatchExecution teardown): two residual WARN
-    // lines landed ahead of the JSON line in the r10 tail and could
-    // push it out of the harness's ~2KB window
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.streaming",
-      org.apache.logging.log4j.Level.ERROR)
-    // WindowExec's "No Partition Defined" WARN fires only from
-    // verified-bounded relations here (100-row dcor samples, 16-row PQ
-    // base, distinct-era folds — audited in VERDICT r11), but five such
-    // lines sat directly above the JSON in the r11 tail: same
-    // tail-eviction risk, same fix
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window.WindowExec",
-      org.apache.logging.log4j.Level.ERROR)
-    // TaskSetManager's "very large task size" WARN fires from the
-    // streaming MEMORY-SINK drains only (the collected micro-batch
-    // result becomes a LocalTableScan whose rows ride the write-task
-    // closures — bounded by the streaming aggregate's output, and a
-    // harness-only path: production streams write to a file sink).
-    // Four such lines sat directly above the r12 JSON tail.
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.scheduler.TaskSetManager",
-      org.apache.logging.log4j.Level.ERROR)
-    // untimed warm-up: JIT/janino-compile the common codegen paths
-    // (scan, hash agg, window, broadcast join) so per-query timings
-    // measure plan execution, not first-use compiler latency
-    locally {
-      import org.apache.spark.sql.functions._
-      val li = spark.read.parquet(s"$sfDir/lineitem.parquet").limit(1000)
-      li.groupBy(col("l_returnflag")).agg(sum(col("l_quantity"))).count()
-      li.withColumn("rn", org.apache.spark.sql.functions.row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy(col("l_returnflag")).orderBy(col("l_orderkey")))).count()
-      li.join(broadcast(li.select(col("l_orderkey").as("k")).limit(10)),
-        col("l_orderkey") === col("k")).count()
-      // warm the documents fixture's page cache too: the FIRST timed
-      // work below is the shared shingle build over documents, and
-      // without this read its first sample pays the cold-file cost the
-      // second (post-two-sweeps) sample never sees — min-of-two would
-      // then systematically select the warm-path time
-      spark.read.parquet(s"$sfDir/documents.parquet").count()
-      spark.catalog.clearCache()
-    }
+    val sfDir = Harness.sfDir
+    val spark = Harness.session()
+    Harness.warmUp(spark, sfDir)
     // in-run host-load probe (r17): the 4-way concurrent shared build
     // is the battery's most contention-sensitive entry — calm 3.67 s
     // vs 6.40 s in the r16 driver window, pure oversubscription of an
@@ -100,20 +20,14 @@ object Bench {
       "q_sample_head" -> 0.072, "q_math_funcs" -> 0.110,
       "q_union_filters" -> 0.176, "q_distinct_flags" -> 0.180)
     def probeRatio(): Double = {
-      val t0 = System.nanoTime()
-      var failed = false
-      probePinned.keys.toSeq.sorted.foreach { n =>
-        try SparkEntry.queries(n)(spark, sfDir)
-          .write.mode("overwrite").format("noop").save()
-        catch { case _: Throwable => failed = true }
-      }
-      spark.catalog.clearCache()
+      val runs = probePinned.keys.toSeq.sorted.map(n =>
+        Harness.timed(spark)(Harness.noop(SparkEntry.queries(n)(spark, sfDir))))
       // a failed probe query leaves its pin in the denominator but no
       // work in the numerator, deflating the ratio exactly when the
       // probe must not under-read — treat any failure as hot and let
       // the shared build take the conservative sequential path
-      if (failed) Double.MaxValue
-      else ((System.nanoTime() - t0) / 1e9) / probePinned.values.sum
+      if (runs.exists(!_._1)) Double.MaxValue
+      else runs.map(_._2).sum / probePinned.values.sum
     }
     // one UNTIMED pass first: the probe queries' first executions pay
     // planning + codegen (~0.2 s each), which reads as a 2-3× "hot"
@@ -128,36 +42,23 @@ object Bench {
     // shared pipeline materializations are timed as their own entry so
     // per-query timings stay honest: q_ngram_jaccard / q_dedup_apply
     // read the pair table this step builds instead of one of them
-    // silently paying the whole shingle pipeline
-    val sharedConc1 = sharedConcurrency()
-    val tShared = System.nanoTime()
-    val sharedOk =
-      try { graft.queries.TextPack.prepareShared(spark, sfDir,
-        concurrency = sharedConc1); true }
-      catch { case _: Throwable => false }
-    val sharedSec = (System.nanoTime() - tShared) / 1e9
-    spark.catalog.clearCache()
-    // r17: the kNN candidate silver table (shared by q_knn_join /
-    // q_knn_label / q_knn_graph) — same protocol as _shared_pairs:
-    // timed as its own entry so the first kNN query in sweep order
-    // doesn't silently pay the whole build
-    val tSharedKnn = System.nanoTime()
-    val sharedKnnOk =
-      try { graft.queries.SimilarityPack.prepareSharedKnn(spark, sfDir); true }
-      catch { case _: Throwable => false }
-    val sharedKnnSec = (System.nanoTime() - tSharedKnn) / 1e9
-    spark.catalog.clearCache()
-    // r17 review: the ADC candidate table (shared by
-    // q_ann_ivfpq_seeded / q_ann_refine) gets the same timed-entry
-    // treatment — without it the codebook/encode/LUT pipeline cost
-    // hid inside whichever consumer ran first in sweep A and then
-    // vanished from the min entirely
-    val tSharedAdc = System.nanoTime()
-    val sharedAdcOk =
-      try { graft.queries.SimilarityPack.prepareSharedAdc(spark, sfDir); true }
-      catch { case _: Throwable => false }
-    val sharedAdcSec = (System.nanoTime() - tSharedAdc) / 1e9
-    spark.catalog.clearCache()
+    // silently paying the whole shingle pipeline. r17 added the kNN
+    // candidate table (q_knn_join / q_knn_label / q_knn_graph) and the
+    // ADC candidate table (q_ann_ivfpq_seeded / q_ann_refine) under the
+    // same protocol: without it their build cost hid inside whichever
+    // consumer ran first in sweep A and then vanished from the min.
+    // Each round re-runs the load probe and returns its concurrency.
+    def sharedBuilds(tag: String): (Int, Seq[(String, (Boolean, Double))]) = {
+      val conc = sharedConcurrency()
+      (conc, Seq(
+        "_shared_pairs" -> Harness.timed(spark)(graft.queries.TextPack
+          .prepareShared(spark, sfDir, tag, concurrency = conc)),
+        "_shared_knn" -> Harness.timed(spark)(graft.queries.SimilarityPack
+          .prepareSharedKnn(spark, sfDir, tag)),
+        "_shared_adc" -> Harness.timed(spark)(graft.queries.SimilarityPack
+          .prepareSharedAdc(spark, sfDir, tag))))
+    }
+    val (sharedConc1, sharedFirst) = sharedBuilds("")
     // fixed (sorted) query order: Map iteration order reshuffles as
     // queries are added, which moves warm-up costs between rounds and
     // makes per-query timings incomparable round over round
@@ -183,24 +84,9 @@ object Bench {
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)
     val sorted = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter(q => only.forall(_.contains(q._1)))
-    // consume through the noop sink, NOT .count(): counting a
-    // cardinality-invariant plan lets Catalyst prune whole
-    // window/global-aggregate pipelines (the round-11 scale probe
-    // caught q_spearman_by_era "costing" 0.2 s under count() at 100x
-    // vs ~22 s actually executed — count() was timing the scan alone
-    // for any query whose tail operators don't change row count). The
-    // noop DSv2 sink executes the full plan and discards rows, the
-    // same work Verify's parquet write does minus the IO.
     def sweep(qs: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)]) =
       qs.map { case (name, fn) =>
-        val t0 = System.nanoTime()
-        val ok = try {
-          fn(spark, sfDir).write.mode("overwrite").format("noop").save(); true
-        } catch { case _: Throwable => false }
-        // drop per-query persisted frames so cache pressure from one
-        // query never skews the next one's timing
-        spark.catalog.clearCache()
-        name -> (ok, (System.nanoTime() - t0) / 1e9)
+        name -> Harness.timed(spark)(Harness.noop(fn(spark, sfDir)))
       }
     // third-sweep set beyond q_stream*: the queries whose r10 driver
     // min still ran 1.6-7x the quiet host — contention windows can
@@ -271,52 +157,23 @@ object Bench {
     // read — both warehouse copies are shutdown-hook-deleted)
     // the load probe re-runs here: contention two sweeps later is a
     // different window than at run start
-    val sharedConc2 = sharedConcurrency()
-    val tShared2 = System.nanoTime()
-    val shared2Ok =
-      try { graft.queries.TextPack.prepareShared(spark, sfDir, "_probe",
-        concurrency = sharedConc2); true }
-      catch { case _: Throwable => false }
-    val shared2Sec = (System.nanoTime() - tShared2) / 1e9
-    spark.catalog.clearCache()
-    val tSharedKnn2 = System.nanoTime()
-    val sharedKnn2Ok =
-      try { graft.queries.SimilarityPack.prepareSharedKnn(spark, sfDir,
-        "_probe"); true }
-      catch { case _: Throwable => false }
-    val sharedKnn2Sec = (System.nanoTime() - tSharedKnn2) / 1e9
-    spark.catalog.clearCache()
-    val tSharedAdc2 = System.nanoTime()
-    val sharedAdc2Ok =
-      try { graft.queries.SimilarityPack.prepareSharedAdc(spark, sfDir,
-        "_probe"); true }
-      catch { case _: Throwable => false }
-    val sharedAdc2Sec = (System.nanoTime() - tSharedAdc2) / 1e9
-    spark.catalog.clearCache()
+    val (sharedConc2, sharedSecond) = sharedBuilds("_probe")
     // the entry's ok flag is the FIRST build's alone — that is the
     // table every consumer query actually read; a probe-only failure
-    // is reported as its own entry instead of poisoning this one.
-    // Remaining known bias: the probe runs after two full sweeps, so
-    // with the warm-up documents read above both samples see a warm
-    // page cache, but the probe still has warmer JIT — the min leans
-    // warm-path by construction, which matches the per-query mins
-    // (both post-warm-up) closely enough for round-over-round reads
-    val sharedEntry = (sharedOk,
-      if (shared2Ok) math.min(sharedSec, shared2Sec) else sharedSec)
-    val sharedKnnEntry = (sharedKnnOk,
-      if (sharedKnn2Ok) math.min(sharedKnnSec, sharedKnn2Sec) else sharedKnnSec)
-    val sharedAdcEntry = (sharedAdcOk,
-      if (sharedAdc2Ok) math.min(sharedAdcSec, sharedAdc2Sec) else sharedAdcSec)
-    val probeEntry =
-      (if (shared2Ok) Seq.empty
-       else Seq("_shared_pairs_probe" -> (false, shared2Sec))) ++
-      (if (sharedKnn2Ok) Seq.empty
-       else Seq("_shared_knn_probe" -> (false, sharedKnn2Sec))) ++
-      (if (sharedAdc2Ok) Seq.empty
-       else Seq("_shared_adc_probe" -> (false, sharedAdc2Sec)))
-    val results = ("_shared_pairs" -> sharedEntry) +:
-      ("_shared_knn" -> sharedKnnEntry) +:
-      ("_shared_adc" -> sharedAdcEntry) +: probeEntry ++:
+    // is reported as its own `<name>_probe` entry instead of poisoning
+    // this one. Remaining known bias: the probe runs after two full
+    // sweeps, so with the warm-up documents read above both samples
+    // see a warm page cache, but the probe still has warmer JIT — the
+    // min leans warm-path by construction, which matches the per-query
+    // mins (both post-warm-up) closely enough for round-over-round reads
+    val sharedEntries = sharedFirst.zip(sharedSecond).map {
+      case ((name, (ok1, t1)), (_, (ok2, t2))) =>
+        name -> (ok1, if (ok2) math.min(t1, t2) else t1)
+    }
+    val probeEntries = sharedSecond.collect {
+      case (name, (false, t)) => s"${name}_probe" -> (false, t)
+    }
+    val results = sharedEntries ++ probeEntries ++
       sweepA.zip(sweepB).map { case ((name, (okA, tA)), (_, (okB, tB))) =>
         val samples = Seq((okA, tA), (okB, tB)) ++ sweepC.get(name)
         name -> (samples.forall(_._1), samples.map(_._2).min)

@@ -1,35 +1,19 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-inspection harness: prints the formatted physical plan of the
-  * named queries (or all with oracle entries) so pushdown/broadcast/
-  * codegen can be audited. Usage: runMain graft.Explain [names...] */
+  * named queries (or all) in Bench's session layout, so pushdown/
+  * broadcast/codegen can be audited on the benched plans. Usage:
+  * runMain graft.Explain [names...] */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
     // same A/B hook as TimeQ: lets a plan audit force a dispatcher
     // branch (e.g. the bucketed percentile) without code edits
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(
-      _.split(";").map(_.trim).filter(_.nonEmpty).foreach { kv =>
-        kv.split("=", 2) match {
-          case Array(k, v) => spark.conf.set(k, v)
-          case _ => sys.error(s"SPARK_GRAFT_EXTRA_CONF entry without '=': '$kv'")
-        }
-      })
-    val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
+    Harness.applyExtraConf(spark)
     val names = if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
     names.foreach { n =>
       println(s"\n========== $n ==========")
-      SparkEntry.queries(n)(spark, dir).explain("formatted")
+      SparkEntry.queries(n)(spark, Harness.sfDir).explain("formatted")
     }
     spark.stop()
   }

@@ -7,8 +7,8 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 /** SparkSessionExtensions entry point (SURVEY §2.11 extension surface):
   * registers the engine's native expressions for SQL use.
   *
-  * Wire up with
-  * `SparkSession.builder().withExtensions(new GraftExtensions)` or
+  * Wire up with a session builder's
+  * `.withExtensions(new GraftExtensions)` or
   * `spark.sql.extensions=graft.functions.GraftExtensions` — after
   * which `SELECT rolling_hash(text)` works from plain SQL.
   */

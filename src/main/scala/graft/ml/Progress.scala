@@ -2,6 +2,7 @@ package graft.ml
 
 import java.util.concurrent.atomic.AtomicLong
 
+import org.apache.spark.graftshim.ListenerDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
@@ -29,13 +30,9 @@ object Progress {
     spark.sparkContext.addSparkListener(p)
     try {
       val r = body
-      // listener bus is async; give it a moment to drain (the bus
-      // drain API is private[spark])
-      val deadline = System.nanoTime() + 5_000_000_000L
-      var last = -1L
-      while (System.nanoTime() < deadline && p.finished.get() != last) {
-        last = p.finished.get(); Thread.sleep(100)
-      }
+      // the bus is async: wait until every task-end event the body
+      // posted has reached `p` (a timed-out drain returns what arrived)
+      ListenerDrain.drain(spark.sparkContext)
       (r, p.finished.get(), p.failed.get())
     } finally spark.sparkContext.removeSparkListener(p)
   }

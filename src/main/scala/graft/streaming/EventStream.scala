@@ -586,7 +586,7 @@ object EventStream {
     * `spark.graft.stream.checkpointDir` base: the offset/commit WAL is
     * written and fsynced per micro-batch, and on the bench host /tmp
     * is disk-backed while /dev/shm is RAM — the harness points the
-    * base there (~100 ms/drain measured by StreamFloorProbe; a
+    * base there (~100 ms/drain, OPTIMIZATION_r17.md "Streaming family"; a
     * checkpoint that survives the JVM is a durability feature these
     * drain-to-completion harness streams never use). Unset, the JVM
     * tmpdir default applies — the production-safe choice. */

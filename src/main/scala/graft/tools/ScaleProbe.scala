@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{SparkEntry, Tables, TempDirs}
+import graft.{Harness, SparkEntry, Tables, TempDirs}
 
 /** 10x scale probe (empirical backing for SCALE.md): blow the heavy
   * fixtures up `factor`x with key-shifted, content-salted copies, then
@@ -370,26 +370,16 @@ object ScaleProbe {
   }
 
   def main(args: Array[String]): Unit = {
-    val base = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val base = Harness.sfDir
     val factor = sys.env.getOrElse("SPARK_GRAFT_PROBE_FACTOR", "10").toInt
     // comma-separated probe subset (e.g. for a targeted 100x rerun of
     // one family); default = the full battery
     val only = sys.env.get("SPARK_GRAFT_PROBE_ONLY").map(_.split(",").toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      // stream drains get full parallelism here (EventStream's
-      // fixture-scale default is 4: right for Verify/Bench where
-      // state-store init dominates, a 4-way ceiling at 100x data)
-      .config("spark.graft.stream.drainPartitions", cpus)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
+    // stream drains get full parallelism here (EventStream's
+    // fixture-scale default is 4: right for Verify/Bench where
+    // state-store init dominates, a 4-way ceiling at 100x data)
+    spark.conf.set("spark.graft.stream.drainPartitions", Harness.cpus.toString)
 
     val big = TempDirs.create("graft_scale_").toAbsolutePath.toString
     val tGen0 = System.nanoTime()
@@ -398,45 +388,33 @@ object ScaleProbe {
 
     def fmt(v: Double): String =
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    def timed(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
-    // min of two runs per (query, dir); per-run clearCache like Bench.
-    // Consume through the noop sink, NOT .count(): counting a
-    // cardinality-invariant plan lets Catalyst prune the entire
-    // window/aggregate pipeline (measured: the one-pass era rank
-    // "cost" 0.2 s at 100x under count() vs ~22 s actually executed)
-    def best(name: String, dir: String): Double =
-      (1 to 2).map { _ =>
-        val t = streamProbes.get(name) match {
-          case Some(drain) => timed(drain(spark, dir))
-          case None => timed(SparkEntry.queries(name)(spark, dir)
-            .write.mode("overwrite").format("noop").save())
-        }
-        spark.catalog.clearCache()
-        t
-      }.min
+    // min of two runs per (query, dir) through the Bench run step
+    // (noop sink, per-run clearCache); ok only if both runs passed
+    def minOf(runs: Seq[(Boolean, Double)]): (Boolean, Double) =
+      (runs.forall(_._1), runs.map(_._2).min)
+    def best(name: String, dir: String): (Boolean, Double) =
+      minOf((1 to 2).map(_ => Harness.timed(spark)(streamProbes.get(name) match {
+        case Some(drain) => drain(spark, dir)
+        case None => Harness.noop(SparkEntry.queries(name)(spark, dir))
+      })))
 
     // shared shingle pipeline: memoized per (dir, tag), so force a
     // fresh build per timed run via distinct probe tags
-    def sharedBest(dir: String): Double =
-      Seq("_sp1", "_sp2").map { tag =>
-        val t = timed(graft.queries.TextPack.prepareShared(spark, dir, tag))
-        spark.catalog.clearCache()
-        t
-      }.min
+    def sharedBest(dir: String): (Boolean, Double) =
+      minOf(Seq("_sp1", "_sp2").map(tag => Harness.timed(spark)(
+        graft.queries.TextPack.prepareShared(spark, dir, tag))))
 
     val sharedRows =
       if (only.exists(!_.contains("_shared_pairs"))) Seq.empty
       else Seq(("_shared_pairs", sharedBest(base), sharedBest(big)))
     val rows = sharedRows ++
       probes.filter(n => only.forall(_.contains(n))).map { name =>
-        val t1 = best(name, base)
-        val tN = best(name, big)
-        (name, t1, tN)
+        (name, best(name, base), best(name, big))
       }
-    val qjson = rows.map { case (n, t1, tN) =>
-      s""""$n":{"t1":${fmt(t1)},"t$factor":${fmt(tN)},"ratio":${fmt(tN / t1)}}"""
+    // a failed run is flagged on its row instead of aborting the probe
+    val qjson = rows.map { case (n, (ok1, t1), (okN, tN)) =>
+      val failed = if (ok1 && okN) "" else ""","failed":true"""
+      s""""$n":{"t1":${fmt(t1)},"t$factor":${fmt(tN)},"ratio":${fmt(tN / t1)}$failed}"""
     }.mkString("{", ",", "}")
     println(s"""{"metric":"scale_probe","factor":$factor,"base":"$base","gen_sec":${fmt(genSec)},"queries":$qjson}""")
     spark.stop()

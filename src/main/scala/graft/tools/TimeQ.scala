@@ -1,16 +1,19 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.Harness
+import org.apache.spark.graftshim.ListenerDrain
 
 /** Per-query timing harness for optimization work: runs the named
   * queries through the same noop-sink protocol as graft.Bench (same
-  * session config, same clearCache between samples), printing every
+  * session, same warm-up, same timed run step), printing every
   * sample plus the min — so a candidate change can be A/B-measured in
   * seconds instead of a full-battery run. Usage:
   *   SPARK_GRAFT_SF_DIR=... SPARK_GRAFT_CPUS=32 \
   *     sbt "runMain graft.tools.TimeQ <reps> name [name...]"
-  * Shared silver tables are prepared (untimed) iff any named query
-  * consumes them, mirroring the bench's prepareShared split. */
+  * The three shared silver-table builds run first, once each, and are
+  * reported like any query. A row ends in `failed` when a sample
+  * threw, and in `drain_timeout` when the listener bus did not drain,
+  * so its work counts may be short. */
 object TimeQ {
   def main(args: Array[String]): Unit = {
     val reps = args.headOption.map(_.toInt).getOrElse(3)
@@ -18,44 +21,12 @@ object TimeQ {
       if (args.drop(1).toSeq == Seq("ALL"))
         graft.SparkEntry.queries.keys.toSeq.sorted
       else args.drop(1).toSeq
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val b0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-    val spark =
-      (if (new java.io.File("/dev/shm").isDirectory)
-        b0.config("spark.graft.stream.checkpointDir", "/dev/shm/graft_ckpt")
-      else b0).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    // A/B experiment hook: semicolon-separated k=v runtime SQL confs.
-    // Skip empty tokens (a trailing semicolon) and fail with a named
-    // error on a token without '=' instead of an opaque MatchError.
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(
-      _.split(";").map(_.trim).filter(_.nonEmpty).foreach { kv =>
-        kv.split("=", 2) match {
-          case Array(k, v) =>
-            spark.conf.set(k, v)
-            println(s"[timeq] conf $k=$v")
-          case _ => sys.error(
-            s"SPARK_GRAFT_EXTRA_CONF entry without '=': '$kv'")
-        }
-      })
-    // same warm-up as Bench: JIT/codegen the common paths untimed
-    locally {
-      import org.apache.spark.sql.functions._
-      val li = spark.read.parquet(s"$sfDir/lineitem.parquet").limit(1000)
-      li.groupBy(col("l_returnflag")).agg(sum(col("l_quantity"))).count()
-      li.join(broadcast(li.select(col("l_orderkey").as("k")).limit(10)),
-        col("l_orderkey") === col("k")).count()
-      spark.read.parquet(s"$sfDir/documents.parquet").count()
-      spark.catalog.clearCache()
+    val sfDir = Harness.sfDir
+    val spark = Harness.session()
+    Harness.applyExtraConf(spark).foreach { case (k, v) =>
+      println(s"[timeq] conf $k=$v")
     }
+    Harness.warmUp(spark, sfDir)
     // Deterministic work metrics, immune to host noise: job/stage/task
     // counts and shuffle bytes per query execution. Wall time on this
     // box swings 2-10x with hypervisor load; task counts do not.
@@ -75,70 +46,51 @@ object TimeQ {
           ()
         }
       })
-    def snap(): (Long, Long, Long, Long) =
-      (jobs.get(), stages.get(), tasks.get(), shuffleB.get())
+    type Work = (Long, Long, Long, Long)
+    def snap(): Work = (jobs.get(), stages.get(), tasks.get(), shuffleB.get())
+    final case class Sample(ok: Boolean, sec: Double, work: Work, drained: Boolean)
+    // a deterministic listener barrier on both sides of the timed run
+    // (was a fixed Thread.sleep, which let late stage events bleed
+    // across queries — ADVICE r17): the one before keeps a prior
+    // query's straggler events out of this delta
+    def measure(body: => Unit): Sample = {
+      val drained0 = ListenerDrain.drain(spark.sparkContext)
+      val before = snap()
+      val (ok, sec) = Harness.timed(spark)(body)
+      val drained1 = ListenerDrain.drain(spark.sparkContext)
+      val after = snap()
+      Sample(ok, sec, (after._1 - before._1, after._2 - before._2,
+        after._3 - before._3, after._4 - before._4), drained0 && drained1)
+    }
+    // keep the MINIMUM per work field across samples, not the last:
+    // contamination (stray maintenance jobs, evicted-cache recomputes)
+    // only ever ADDS work, so min is the clean count
+    def report(name: String, ss: Seq[Sample]): Unit = {
+      val w = ss.map(_.work)
+      val tail = (if (ss.forall(_.ok)) "" else " failed") +
+        (if (ss.forall(_.drained)) "" else " drain_timeout")
+      println(f"[timeq] $name%-28s min=${ss.map(_.sec).min}%.3f " +
+        f"jobs=${w.map(_._1).min} stages=${w.map(_._2).min} " +
+        f"tasks=${w.map(_._3).min} shufKB=${w.map(_._4).min / 1024} samples=" +
+        ss.map(s => f"${s.sec}%.3f").mkString(",") + tail)
+    }
     // the shared silver-table builds, instrumented like any query (the
     // bench bills them as their own entries, so their work metrics are
     // first-class optimization targets — r18)
-    def timedBuild(name: String)(build: => Unit): Unit = {
-      org.apache.spark.graftshim.ListenerDrain.drain(spark.sparkContext)
-      val before = snap()
-      val t0 = System.nanoTime()
-      build
-      val sec = (System.nanoTime() - t0) / 1e9
-      spark.catalog.clearCache()
-      org.apache.spark.graftshim.ListenerDrain.drain(spark.sparkContext)
-      val after = snap()
-      println(f"[timeq] $name%-28s min=$sec%.3f jobs=${after._1 - before._1} " +
-        f"stages=${after._2 - before._2} tasks=${after._3 - before._3} " +
-        f"shufKB=${(after._4 - before._4) / 1024} samples=$sec%.3f")
-    }
-    timedBuild("_shared_pairs") {
-      graft.queries.TextPack.prepareShared(spark, sfDir) }
-    timedBuild("_shared_knn") {
-      graft.queries.SimilarityPack.prepareSharedKnn(spark, sfDir) }
-    timedBuild("_shared_adc") {
-      graft.queries.SimilarityPack.prepareSharedAdc(spark, sfDir) }
+    report("_shared_pairs", Seq(measure(
+      graft.queries.TextPack.prepareShared(spark, sfDir))))
+    report("_shared_knn", Seq(measure(
+      graft.queries.SimilarityPack.prepareSharedKnn(spark, sfDir))))
+    report("_shared_adc", Seq(measure(
+      graft.queries.SimilarityPack.prepareSharedAdc(spark, sfDir))))
     // SWEEP-interleaved sampling (the Bench protocol): consecutive
     // samples of one query land in the same host-contention window;
     // spacing a query's samples a full sweep apart lets min-of-k
     // reject windows shorter than a sweep
-    val samples = scala.collection.mutable.Map[String, Vector[Double]]()
-      .withDefaultValue(Vector.empty)
-    val work = scala.collection.mutable.Map[String, (Long, Long, Long, Long)]()
-    (1 to reps).foreach { _ =>
-      names.foreach { n =>
-        val fn = graft.SparkEntry.queries(n)
-        // deterministic listener barrier BEFORE the snapshot too, so a
-        // prior query's straggler events can't land inside this delta
-        org.apache.spark.graftshim.ListenerDrain.drain(spark.sparkContext)
-        val before = snap()
-        val t0 = System.nanoTime()
-        fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-        spark.catalog.clearCache()
-        samples(n) = samples(n) :+ (System.nanoTime() - t0) / 1e9
-        // drain the async bus deterministically (was a fixed
-        // Thread.sleep, which let late stage events bleed across
-        // queries — ADVICE r17)
-        org.apache.spark.graftshim.ListenerDrain.drain(spark.sparkContext)
-        val after = snap()
-        val delta = (after._1 - before._1, after._2 - before._2,
-          after._3 - before._3, after._4 - before._4)
-        // keep the MINIMUM per field across reps, not the last rep:
-        // contamination (stray maintenance jobs, evicted-cache
-        // recomputes) only ever ADDS work, so min is the clean count
-        work(n) = work.get(n).fold(delta)(p =>
-          (math.min(p._1, delta._1), math.min(p._2, delta._2),
-            math.min(p._3, delta._3), math.min(p._4, delta._4)))
-      }
+    val sweeps = (1 to reps).map { _ =>
+      names.map(n => measure(Harness.noop(graft.SparkEntry.queries(n)(spark, sfDir))))
     }
-    names.foreach { n =>
-      val ts = samples(n)
-      val (j, st, tk, sb) = work(n)
-      println(f"[timeq] $n%-28s min=${ts.min}%.3f jobs=$j stages=$st " +
-        f"tasks=$tk shufKB=${sb / 1024} samples=" +
-        ts.map(t => f"$t%.3f").mkString(","))
-    }
+    names.zipWithIndex.foreach { case (n, i) => report(n, sweeps.map(_(i))) }
     spark.stop()
   }
 }

@@ -72,9 +72,22 @@ class ReductionSpec extends AnyFunSuite {
   }
 
   test("Progress listener counts finished tasks for a job") {
-    val (n, finished, failedN) = Progress.tracked(spark) {
-      df.count()
+    // an independent tally of the same body: every completed stage's
+    // task count, seen by a stage-completed listener
+    val stageTasks = new java.util.concurrent.atomic.AtomicLong(0)
+    val stages = new org.apache.spark.scheduler.SparkListener {
+      override def onStageCompleted(
+          e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
+        stageTasks.addAndGet(e.stageInfo.numTasks); ()
+      }
     }
+    org.apache.spark.graftshim.ListenerDrain.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(stages)
+    val (n, finished, failedN) =
+      try Progress.tracked(spark) { df.count() }
+      finally spark.sparkContext.removeSparkListener(stages)
     assert(n > 0 && finished > 0 && failedN == 0)
+    // tracked drains the bus before reading, so no task end is missed
+    assert(finished == stageTasks.get())
   }
 }
