@@ -40,17 +40,35 @@ object FeatureSelection {
     * (`feature_selection_numerai.py:54-55`), averaged over k era folds,
     * descending. Deterministic given `seed`.
     *
-    * Per fold, the baseline and every per-feature permuted variant are
-    * unioned into ONE tagged relation, model-transformed once, and
-    * scored with a single grouped aggregate (rank window partitioned by
-    * (variant, era) → corr per variant) — one Spark action per fold
-    * instead of features+1, and the variant fan-out runs fully on the
-    * executors.
+    * Per fold, the baseline and every per-feature permuted variant form
+    * ONE tagged relation ([[variants]]: a variant index exploded over
+    * the permuted frame, not a union of features+1 projections, so
+    * there is one branch to plan, compile and schedule), which is
+    * model-transformed once and scored with a single grouped aggregate
+    * (rank window partitioned by (variant, era) → corr per variant) —
+    * one Spark action per fold instead of features+1, and the variant
+    * fan-out runs fully on the executors.
+    *
+    * Folds run concurrently on a pool of `k` driver threads; `fit` and
+    * `permKeyFor` are called from those threads and must be
+    * thread-safe. Everything this call persists is released before it
+    * returns (the result is a tiny driver-built frame).
     */
   def mda(df: DataFrame, eraCol: String, featCols: Seq[String],
           targetCol: String, idCols: Seq[String], k: Int, seed: Long,
           fit: DataFrame => (DataFrame => DataFrame),
-          permKeyFor: Option[Int => Column] = None): DataFrame = {
+          permKeyFor: Option[Int => Column] = None): DataFrame =
+    mdaWith(variants)(df, eraCol, featCols, targetCol, idCols, k, seed, fit, permKeyFor)
+
+  /** [[mda]] with the per-fold variant builder as a parameter (called
+    * as `variantsOf(permuted, testColumns, featCols)`, see [[variants]])
+    * — the seam `SelectionSpec` uses to score the replaced union form
+    * beside the current one. */
+  private[graft] def mdaWith(variantsOf: (DataFrame, Seq[String], Seq[String]) => DataFrame)(
+      df: DataFrame, eraCol: String, featCols: Seq[String],
+      targetCol: String, idCols: Seq[String], k: Int, seed: Long,
+      fit: DataFrame => (DataFrame => DataFrame),
+      permKeyFor: Option[Int => Column]): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
@@ -72,49 +90,47 @@ object FeatureSelection {
     def foldRows(f: Int): Seq[(String, Long, Double)] = {
       val train = withFold.filter(col("fold") =!= f).drop("fold")
       val test = withFold.filter(col("fold") === f).drop("fold").persist()
-      val predict = fit(train)
-      // one permutation join yields every feature's permuted copy;
-      // per-feature variants are then pure projections over it.
-      // permKeyFor lets the deterministic-fitter oracle twin swap the
-      // xxhash64 deal for an ANSI-SQL-expressible arithmetic hash.
-      val permKey = permKeyFor.map(_(f))
-        .getOrElse(xxhash64(idCols.map(col) :+ lit(seed + f): _*))
-      val permuted = Folds.permuteManyWithinEra(test, featCols, eraCol, idCols,
-        permKey).persist()
-      val variants = ("__base__", test) +: featCols.map { ft =>
-        ft -> permuted.select(test.columns.map(c =>
-          if (c == ft) col(s"${ft}_perm").as(ft) else col(c)): _*)
-      }
-      val tagged = variants.map { case (tag, fr) =>
-        fr.select(test.columns.map(col): _*).withColumn("graft_feat", lit(tag))
-      }.reduce(_ unionByName _)
-      val scored = predict(tagged)
-      // r14: era-size-adaptive rank dispatch, measured on the PERSISTED
-      // test frame (cheap) — the variant tag multiplies window-partition
-      // COUNT by features+1 while each (variant, era) partition stays
-      // one era of test rows, so the test frame's largest era is the
-      // honest dispatch statistic for the tagged union. Past the
-      // ceiling, the rank rides the two-pass form with a composite
-      // (variant, era) key — bit-identical values, no window partition
-      // spans an era (the same hazard SCALE.md's permutation pair
-      // quantifies: 23.7x vs 5.5x wall at 100x).
-      val twoPass = maxEraByFold.getOrElse(f.toLong, 0L) >
-        graft.operators.EraRank.onePassCeiling(test)
-      val ranked =
-        if (!twoPass) {
-          val order = Window.partitionBy(col("graft_feat"), col(eraCol))
-            .orderBy((col("pred") +: idCols.map(col)).map(_.asc): _*)
-          val whole = Window.partitionBy(col("graft_feat"), col(eraCol))
-          scored.withColumn("graft_r",
-            row_number().over(order).cast("double") / count(lit(1)).over(whole))
-        } else {
-          graft.operators.EraRank.withPctRankFirstTwoPass(scored, "graft_r", 32,
-            struct(col("graft_feat"), col(eraCol)), col("pred"), idCols.map(col): _*)
-        }
-      val sp = ranked
-        .groupBy(col("graft_feat"))
-        .agg(corr(col(targetCol), col("graft_r")).as("spearman"))
-        .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+      // everything below is collected here, so the fold's persisted
+      // test frame is released on the way out
+      val sp = try {
+        val predict = fit(train)
+        // one permutation join yields every feature's permuted copy;
+        // the variants are then one exploded projection over it.
+        // permKeyFor lets the deterministic-fitter oracle twin swap the
+        // xxhash64 deal for an ANSI-SQL-expressible arithmetic hash.
+        val permKey = permKeyFor.map(_(f))
+          .getOrElse(xxhash64(idCols.map(col) :+ lit(seed + f): _*))
+        val permuted = Folds.permuteManyWithinEra(test, featCols, eraCol, idCols,
+          permKey)
+        val tagged = variantsOf(permuted, test.columns.toSeq, featCols)
+        val scored = predict(tagged)
+        // r14: era-size-adaptive rank dispatch, measured on the PERSISTED
+        // test frame (cheap) — the variant tag multiplies window-partition
+        // COUNT by features+1 while each (variant, era) partition stays
+        // one era of test rows, so the test frame's largest era is the
+        // honest dispatch statistic for the tagged relation. Past the
+        // ceiling, the rank rides the two-pass form with a composite
+        // (variant, era) key — bit-identical values, no window partition
+        // spans an era (the same hazard SCALE.md's permutation pair
+        // quantifies: 23.7x vs 5.5x wall at 100x).
+        val twoPass = maxEraByFold.getOrElse(f.toLong, 0L) >
+          graft.operators.EraRank.onePassCeiling(test)
+        val ranked =
+          if (!twoPass) {
+            val order = Window.partitionBy(col("graft_feat"), col(eraCol))
+              .orderBy((col("pred") +: idCols.map(col)).map(_.asc): _*)
+            val whole = Window.partitionBy(col("graft_feat"), col(eraCol))
+            scored.withColumn("graft_r",
+              row_number().over(order).cast("double") / count(lit(1)).over(whole))
+          } else {
+            graft.operators.EraRank.withPctRankFirstTwoPass(scored, "graft_r", 32,
+              struct(col("graft_feat"), col(eraCol)), col("pred"), idCols.map(col): _*)
+          }
+        ranked
+          .groupBy(col("graft_feat"))
+          .agg(corr(col(targetCol), col("graft_r")).as("spearman"))
+          .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+      } finally test.unpersist()
       val base = sp("__base__")
       featCols.map { feat =>
         val shuff = sp(feat)
@@ -133,11 +149,35 @@ object FeatureSelection {
         futs.flatMap(fu =>
           try fu.get()
           catch { case e: java.util.concurrent.ExecutionException => throw e.getCause })
-      } finally pool.shutdown()
+      } finally {
+        pool.shutdown()
+        withFold.unpersist()
+      }
     rows.toDF("feature", "fold", "importance")
       .groupBy(col("feature"))
       .agg(round(avg(col("importance")), 6).as("importance"))
       .orderBy(col("importance").desc, col("feature"))
+  }
+
+  /** MDA's per-fold variant relation: every row of `permuted` (a
+    * [[Folds.permuteManyWithinEra]] output, which carries `<f>_perm`
+    * beside each feature `f`) once per variant, tagged `graft_feat`.
+    * Variant 0 (`__base__`) keeps every feature; variant j+1 (tag
+    * `featCols(j)`) swaps feature j for its permuted copy. Built as one
+    * exploded projection — `when(idx === j+1, f_perm).otherwise(f)` —
+    * so downstream operators see a single branch; `SelectionSpec` pins
+    * it, as a multiset, to the union of features+1 projections it
+    * replaced. Output columns: `cols` then `graft_feat`. */
+  private[graft] def variants(permuted: DataFrame, cols: Seq[String],
+                              featCols: Seq[String]): DataFrame = {
+    val tags = array(("__base__" +: featCols).map(lit): _*)
+    permuted
+      .withColumn("graft_v", explode(sequence(lit(0), lit(featCols.length))))
+      .select(cols.map { c =>
+        val j = featCols.indexOf(c)
+        if (j < 0) col(c)
+        else when(col("graft_v") === j + 1, col(s"${c}_perm")).otherwise(col(c)).as(c)
+      } :+ element_at(tags, col("graft_v") + 1).as("graft_feat"): _*)
   }
 
   /** M9 selector: top-n features by importance (`feature_selection_

@@ -1,38 +1,91 @@
 package graft.ml
 
-import org.apache.spark.ml.feature.{PCA, PCAModel, VectorAssembler}
+import org.apache.spark.ml.linalg.{DenseMatrix, DenseVector}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** M11/M12 with a real reducer (`utils.py:132-167` fit_transform_dask,
-  * `tuners.py:149-252` tune_reduction_dask): MLlib PCA as the JVM twin
-  * of the reference's sklearn reductions (SURVEY §2.11 — PCA is the
-  * one with a first-class MLlib twin; Isomap/UMAP/LLE stay
-  * caller-supplied, mirroring the reference's "any sklearn object").
+  * `tuners.py:149-252` tune_reduction_dask): PCA as the JVM twin of
+  * the reference's sklearn reductions (SURVEY §2.11 — PCA is the one
+  * with a first-class MLlib twin; Isomap/UMAP/LLE stay caller-supplied,
+  * mirroring the reference's "any sklearn object").
   *
   * Fit runs on a bounded deterministic head sample (the reference fits
-  * on `num_fit_rows`), the fitted model broadcasts with the plan, and
-  * the transform is a distributed projection — the manual
-  * `num_splits` chunking evaporates into Spark partitioning.
+  * on `num_fit_rows`): one covariance aggregate, then a local
+  * eigendecomposition of the d×d matrix. The transform is a plain
+  * linear projection Column — the manual `num_splits` chunking
+  * evaporates into Spark partitioning.
   */
 object Reduction {
 
+  /** A fitted PCA: `pc` is the d×k loading matrix (column i is
+    * component i), `explainedVariance` the k leading eigenvalues over
+    * the sum of ALL d eigenvalues — the same two fields, with the same
+    * meaning, as MLlib's `PCAModel`. */
+  case class PcaFit(pc: DenseMatrix, explainedVariance: DenseVector)
+
   /** Fit PCA(k) on the first `nFit` rows (ordered by `orderCol`), then
-    * transform the WHOLE frame; appends `pc_0..pc_{k-1}`. */
+    * transform the WHOLE frame; appends `pc_0..pc_{k-1}`.
+    *
+    * The fit is ONE `var_samp`/`covar_samp` aggregate over the head
+    * (the stable one-pass co-moment forms, not raw Gram sums) and a
+    * commons-math3 `EigenDecomposition` of the d×d sample covariance,
+    * eigenvalues descending. It replaces MLlib `PCA`, whose
+    * VectorAssembler/RDD fit and breeze SVD cost several jobs and ~2 s
+    * of cold start for an 8×8 matrix; `ReductionSpec` pins the result
+    * against MLlib `PCA` (explained variance and loadings within 1e-9,
+    * loadings up to sign). Each component's sign is fixed so its
+    * largest-|loading| entry (first on ties) is positive. Like
+    * `PCAModel.transform`, the projection `pc_i = Σ_j w_ji·x_j` does
+    * not center.
+    *
+    * Invalid input stays loud, as with the VectorAssembler (handleInvalid
+    * `error`) the MLlib fit used: a null or NaN feature in the head
+    * sample fails the fit with an `IllegalArgumentException` naming the
+    * column, and a null or NaN feature in any transformed row fails the
+    * action that reads a `pc_i`. A constant (zero-variance) feature is
+    * valid: it yields a zero eigenvalue, sorted last. */
   def pcaFitTransformOnHead(df: DataFrame, featCols: Seq[String], k: Int,
-                            nFit: Int, orderCol: String): (DataFrame, PCAModel) = {
-    val va = new VectorAssembler().setInputCols(featCols.toArray)
-      .setOutputCol("graft_fv")
-    val head = va.transform(df.orderBy(col(orderCol)).limit(nFit))
-    val model = new PCA().setInputCol("graft_fv").setOutputCol("graft_pc")
-      .setK(k).fit(head)
-    val out = model.transform(va.transform(df))
-      .withColumn("graft_pc_arr",
-        org.apache.spark.ml.functions.vector_to_array(col("graft_pc")))
-    val withPcs = (0 until k).foldLeft(out) { (acc, i) =>
-      acc.withColumn(s"pc_$i", col("graft_pc_arr").getItem(i))
-    }.drop("graft_pc_arr")
-    (withPcs.drop("graft_fv", "graft_pc"), model)
+                            nFit: Int, orderCol: String): (DataFrame, PcaFit) = {
+    val d = featCols.length
+    require(k >= 1 && k <= d, s"PCA k=$k must be in [1, $d]")
+    val x = featCols.map(c => col(c).cast("double"))
+    val pairs = for (i <- 0 until d; j <- i until d) yield (i, j)
+    val invalid = x.map(c => sum(when(c.isNull || isnan(c), 1L).otherwise(0L)))
+    val stats = df.orderBy(col(orderCol)).limit(nFit).agg(
+      count(lit(1)), (invalid ++ pairs.map { case (i, j) =>
+        if (i == j) var_samp(x(i)) else covar_samp(x(i), x(j)) }): _*).head()
+    featCols.indices.find(i => stats.getLong(1 + i) > 0).foreach { i =>
+      throw new IllegalArgumentException(
+        s"PCA fit sample has a null or NaN value in feature ${featCols(i)}")
+    }
+    require(stats.getLong(0) >= 2, s"PCA fit needs at least 2 rows, got ${stats.getLong(0)}")
+    val cov = Array.ofDim[Double](d, d)
+    pairs.zipWithIndex.foreach { case ((i, j), p) =>
+      val v = stats.getDouble(1 + d + p)
+      cov(i)(j) = v; cov(j)(i) = v
+    }
+    val eig = new org.apache.commons.math3.linear.EigenDecomposition(
+      new org.apache.commons.math3.linear.Array2DRowRealMatrix(cov, false))
+    // a covariance is PSD: a negative eigenvalue is rounding noise
+    val lambda = eig.getRealEigenvalues.map(math.max(_, 0.0))
+    val order = lambda.indices.sortBy(i => -lambda(i)).take(k)
+    val total = lambda.sum
+    val loadings = order.map { i =>
+      val v = eig.getEigenvector(i).toArray
+      val top = v.indices.maxBy(r => math.abs(v(r)))
+      if (v(top) < 0) v.map(-_) else v
+    }
+    val fit = PcaFit(
+      new DenseMatrix(d, k, loadings.flatten.toArray),
+      new DenseVector(order.map(i => if (total > 0) lambda(i) / total else 0.0).toArray))
+    val bad = x.map(c => c.isNull || isnan(c)).reduce(_ || _)
+    val out = loadings.zipWithIndex.foldLeft(df) { case (acc, (w, i)) =>
+      val proj = w.indices.map(j => x(j) * lit(w(j))).reduce(_ + _)
+      acc.withColumn(s"pc_$i", when(bad,
+        raise_error(lit("PCA transform: a feature is null or NaN"))).otherwise(proj))
+    }
+    (out, fit)
   }
 
   /** F8 — thin SVD of the deterministic head sample

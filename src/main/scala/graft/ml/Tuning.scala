@@ -40,12 +40,34 @@ object Tuning {
 
   /** M5 random search: evaluate every LHS sample, rank descending.
     * `evaluate` typically runs [[CrossVal.kfoldScores]] and collects
-    * the mean metric — a handful of Spark jobs per trial. */
+    * the mean metric — a handful of Spark jobs per trial.
+    *
+    * CONCURRENCY CONTRACT: the samples are independent, so they are
+    * evaluated on a [[graft.Pools]] pool of up to `n` threads (the
+    * reference submits its whole samples×folds grid as one set of
+    * futures, `tuners.py:70-77`): `evaluate` is invoked CONCURRENTLY
+    * from several driver threads and must be thread-safe — pure
+    * functions and Spark actions are; un-synchronized mutable
+    * accumulators are not. Futures join in sample order, so the trials
+    * are identical to the sequential loop at any pool width
+    * (`ConcurrencySpec` pins width 1 against full width). */
   def lhsSearch(params: Seq[Param], n: Int, seed: Long)
-               (evaluate: Map[String, Double] => Double): Seq[Trial] =
-    latinHypercube(params, n, seed)
-      .map(c => Trial(c, evaluate(c)))
-      .sortBy(-_.score)
+               (evaluate: Map[String, Double] => Double): Seq[Trial] = {
+    val configs = latinHypercube(params, n, seed)
+    val pool = graft.Pools.newPool(math.max(1, configs.size))
+    val scores =
+      try {
+        val futs = configs.map { c =>
+          pool.submit(new java.util.concurrent.Callable[Double] {
+            def call(): Double = evaluate(c)
+          })
+        }
+        futs.map(f =>
+          try f.get()
+          catch { case e: java.util.concurrent.ExecutionException => throw e.getCause })
+      } finally pool.shutdown()
+    configs.zip(scores).map { case (c, sc) => Trial(c, sc) }.sortBy(-_.score)
+  }
 
   /** M6 Hyperband (`tuners.py:376-509`): successive halving over
     * brackets. `evaluate(config, resourceFraction)` scores a config

@@ -547,9 +547,11 @@ object MlPack extends QueryPack {
     * deterministic head sample, the projected data scored by 2-fold
     * era CV of the deterministic additive-OLS model (the reference
     * tunes "any sklearn reducer + estimator"; the OLS twin keeps the
-    * whole loop deterministic). Rows-only check (PCA eigenvector
-    * sign/order is engine-specific). Leaderboard rows are keyed by k;
-    * `spearman` carries the ranking. */
+    * whole loop deterministic). Rows-only check: the fitted PCA
+    * (covariance aggregate + commons-math3 eigendecomposition, see
+    * [[graft.ml.Reduction.pcaFitTransformOnHead]]) has no ANSI SQL
+    * recomputation, and ReductionSpec pins it against MLlib `PCA`.
+    * Leaderboard rows are keyed by k; `spearman` carries the ranking. */
   def qReductionTune(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     import graft.ml.{Reduction, Scoring}
@@ -602,9 +604,10 @@ object MlPack extends QueryPack {
     * all of which DuckDB recomputes from the 8-dim Gram/covariance
     * matrix with no eigendecomposition; `ortho_resid` = max|VᵀV−I|
     * from the k×k loading matrix driver-side pins orthonormality
-    * (oracle: literal 0.0). Eigenvector sign/order — the part that is
-    * engine-specific — cancels out of every emitted column. The k<d
-    * reduction path stays exercised by q_reduction_tune. */
+    * (oracle: literal 0.0). Eigenvector sign/order — the part a
+    * different eigensolver may choose differently — cancels out of
+    * every emitted column. The k<d reduction path stays exercised by
+    * q_reduction_tune. */
   def qPcaReduce(s: SparkSession, d: String): DataFrame = {
     import graft.ml.Reduction
     val k = featCols.length

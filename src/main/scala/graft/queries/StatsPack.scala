@@ -379,7 +379,10 @@ object StatsPack extends QueryPack {
     * percentile aggregate, broadcast back), both windows bucketed by
     * the same edges, PSI = Σ (p_cur − p_ref)·ln(p_cur/p_ref) with a
     * 1e-4 floor against empty buckets. The corpus-scale passes are
-    * two scans + one 10-key groupBy each. */
+    * two scans + one 10-key groupBy each. A decile between two equal
+    * values is that value exactly (`percentile` interpolates only
+    * between distinct neighbours), so rows equal to it stay in the
+    * lower bucket (PsiSpec). */
   def qPsi(s: SparkSession, d: String): DataFrame = {
     val ev = Tables.events(s, d)
       .select(dayofmonth(col("ts")).as("day"), col("value"))
@@ -495,15 +498,25 @@ object StatsPack extends QueryPack {
         |      THEN 1 ELSE 0 END) AS BIGINT) AS n_below_half_iqr
         |FROM events JOIN fit ON event_type = et
         |GROUP BY 1 ORDER BY 1""".stripMargin,
+    // deciles as lo + (hi - lo) * frac at position (n - 1) * p, not
+    // quantile_cont: its lo * (1 - frac) + hi * frac lands an ulp off a
+    // decile that falls between two equal values (PsiSpec)
     "q_psi" ->
       """WITH ev AS (SELECT day(ts) AS day, value FROM events),
         |ref AS (SELECT value FROM ev WHERE day <= 15),
         |cur AS (SELECT value FROM ev WHERE day > 15),
-        |e AS (SELECT quantile_cont(value, 0.1) AS e1, quantile_cont(value, 0.2) AS e2,
-        |  quantile_cont(value, 0.3) AS e3, quantile_cont(value, 0.4) AS e4,
-        |  quantile_cont(value, 0.5) AS e5, quantile_cont(value, 0.6) AS e6,
-        |  quantile_cont(value, 0.7) AS e7, quantile_cont(value, 0.8) AS e8,
-        |  quantile_cont(value, 0.9) AS e9 FROM ref),
+        |o AS (SELECT value, row_number() OVER (ORDER BY value) - 1 AS i FROM ref),
+        |q AS (SELECT p, ((SELECT count(*) FROM ref) - 1) * (CAST(p AS DOUBLE) / 10) AS pos
+        |      FROM range(1, 10) t(p)),
+        |qe AS (SELECT p, min(value) FILTER (WHERE i = floor(pos))
+        |        + (min(value) FILTER (WHERE i = ceil(pos))
+        |           - min(value) FILTER (WHERE i = floor(pos))) * (pos - floor(pos)) AS edge
+        |       FROM q JOIN o ON i = floor(pos) OR i = ceil(pos) GROUP BY p, pos),
+        |e AS (SELECT max(edge) FILTER (WHERE p = 1) AS e1, max(edge) FILTER (WHERE p = 2) AS e2,
+        |  max(edge) FILTER (WHERE p = 3) AS e3, max(edge) FILTER (WHERE p = 4) AS e4,
+        |  max(edge) FILTER (WHERE p = 5) AS e5, max(edge) FILTER (WHERE p = 6) AS e6,
+        |  max(edge) FILTER (WHERE p = 7) AS e7, max(edge) FILTER (WHERE p = 8) AS e8,
+        |  max(edge) FILTER (WHERE p = 9) AS e9 FROM qe),
         |rb AS (SELECT (CASE WHEN value > e1 THEN 1 ELSE 0 END +
         |  CASE WHEN value > e2 THEN 1 ELSE 0 END + CASE WHEN value > e3 THEN 1 ELSE 0 END +
         |  CASE WHEN value > e4 THEN 1 ELSE 0 END + CASE WHEN value > e5 THEN 1 ELSE 0 END +

@@ -8,9 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * out-of-tree audit): the driver-side pools join futures in fixed
   * submission order, so the same computation at pool width 1 and at
   * full width must produce IDENTICAL results — not merely equivalent
-  * ones. Runs the CrossVal fold pool and the Reduction candidate pool
-  * (which nests the fold pool) both ways via the `graft.pool.size`
-  * lever and compares collected rows exactly.
+  * ones. Runs the CrossVal fold pool, the LHS sample pool and the
+  * Reduction candidate pool (the last two nest the fold pool) both
+  * ways via the `graft.pool.size` lever and compares results exactly.
   */
 class ConcurrencySpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -67,6 +67,25 @@ class ConcurrencySpec extends AnyFunSuite {
     val concurrent = withPoolSize(64)(run())
     assert(sequential === concurrent)
     assert(sequential.nonEmpty)
+  }
+
+  test("LHS sample pool (nesting the fold pool) with an RF evaluate: width 1 and full width agree") {
+    val ff = featureFrame.persist()
+    try {
+      def run(): Seq[ml.Tuning.Trial] =
+        ml.Tuning.lhsSearch(Seq(ml.Tuning.Param("trees", 2, 4, isInt = true),
+          ml.Tuning.Param("depth", 2, 3, isInt = true)), n = 3, seed = 7) { c =>
+          ml.CrossVal.kfoldScores(ff, "era", 2,
+            ml.FeatureSelection.rfFitter((0 until 4).map(i => s"e_$i"), "target",
+              c("trees").toInt, c("depth").toInt, 7L),
+            sc => sc.agg(corr(col("pred"), col("target")).as("c")))
+            .agg(avg(col("c"))).head().getDouble(0)
+        }
+      val sequential = withPoolSize(1)(run())
+      val concurrent = withPoolSize(64)(run())
+      assert(sequential === concurrent)
+      assert(sequential.length === 3)
+    } finally ff.unpersist()
   }
 
   test("Reduction candidate pool (nesting the fold pool): width 1 and full width agree") {

@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.ml.feature.{PCA, PCAModel, VectorAssembler}
+import org.apache.spark.ml.functions.vector_to_array
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -30,6 +33,85 @@ class ReductionSpec extends AnyFunSuite {
       df, featCols, k = 3, nFit = 200, orderCol = "vec_id")
     assert(reduced.select("vec_id", "pc_0").except(
       reduced2.select("vec_id", "pc_0")).count() == 0)
+  }
+
+  // MLlib PCA, the fit pcaFitTransformOnHead replaced (reference code
+  // only): VectorAssembler (handleInvalid "error") + PCA on the same head
+  private def mllibPca(frame: DataFrame, feats: Seq[String], k: Int, nFit: Int,
+                       orderCol: String): (PCAModel, DataFrame) = {
+    val va = new VectorAssembler().setInputCols(feats.toArray).setOutputCol("graft_fv")
+    val model = new PCA().setInputCol("graft_fv").setOutputCol("graft_pc").setK(k)
+      .fit(va.transform(frame.orderBy(col(orderCol)).limit(nFit)))
+    (model, model.transform(va.transform(frame))
+      .select(col(orderCol), vector_to_array(col("graft_pc")).as("graft_ref")))
+  }
+
+  private def assertMatchesMllib(frame: DataFrame, feats: Seq[String], k: Int,
+                                 nFit: Int, orderCol: String): Unit = {
+    val (reduced, fit) = Reduction.pcaFitTransformOnHead(frame, feats, k, nFit, orderCol)
+    val (ref, refOut) = mllibPca(frame, feats, k, nFit, orderCol)
+    val d = feats.length
+    assert(fit.pc.numRows == d && fit.pc.numCols == k)
+    fit.explainedVariance.toArray.zip(ref.explainedVariance.toArray).foreach {
+      case (a, b) => assert(math.abs(a - b) < 1e-9, s"explained variance $a vs $b")
+    }
+    // loadings agree up to one sign per component
+    val sign = (0 until k).map { i =>
+      if ((0 until d).map(j => fit.pc(j, i) * ref.pc(j, i)).sum < 0) -1.0 else 1.0
+    }
+    for (i <- 0 until k; j <- 0 until d)
+      assert(math.abs(fit.pc(j, i) - sign(i) * ref.pc(j, i)) < 1e-9,
+        s"loading ($j, $i): ${fit.pc(j, i)} vs ${sign(i) * ref.pc(j, i)}")
+    val rows = reduced.join(refOut, orderCol)
+      .select((0 until k).map(i => col(s"pc_$i")) :+ col("graft_ref"): _*).collect()
+    assert(rows.length == frame.count())
+    rows.foreach { r =>
+      val refPc = r.getSeq[Double](k)
+      (0 until k).foreach { i =>
+        assert(math.abs(r.getDouble(i) - sign(i) * refPc(i)) < 1e-9,
+          s"pc_$i: ${r.getDouble(i)} vs ${sign(i) * refPc(i)}")
+      }
+    }
+  }
+
+  test("PCA fit matches MLlib PCA: explained variance, loadings, projections") {
+    assertMatchesMllib(df, featCols, k = 3, nFit = 200, orderCol = "vec_id")
+    assertMatchesMllib(df, featCols, k = 8, nFit = 200, orderCol = "vec_id")
+  }
+
+  private lazy val small = (1 to 30).map { i =>
+    (i.toLong, math.sin(i * 1.3), math.cos(i * 0.7) * 2.0 + 0.3 * math.sin(i * 1.3), 3.0)
+  }.toDF("id", "f0", "f1", "f2")
+
+  test("PCA fit on a constant column: zero eigenvalue last, no NaN, matches MLlib") {
+    val feats = Seq("f0", "f1", "f2")
+    val (reduced, fit) = Reduction.pcaFitTransformOnHead(small, feats, 3, 30, "id")
+    val ev = fit.explainedVariance.toArray
+    assert(ev.forall(v => !v.isNaN) && fit.pc.toArray.forall(v => !v.isNaN))
+    assert(ev(0) >= ev(1) && ev(1) > 0.0 && ev(2) == 0.0)
+    assert(math.abs(ev.sum - 1.0) < 1e-12)
+    // the zero-variance direction is the constant column itself
+    assert(math.abs(fit.pc(2, 2) - 1.0) < 1e-12 &&
+      math.abs(fit.pc(0, 2)) < 1e-12 && math.abs(fit.pc(1, 2)) < 1e-12)
+    assert(reduced.select("pc_2").collect().forall(r => math.abs(r.getDouble(0) - 3.0) < 1e-12))
+    assertMatchesMllib(small, feats, 3, 30, "id")
+  }
+
+  test("PCA stays loud on a null or NaN feature, as the MLlib fit was") {
+    val feats = Seq("f0", "f1", "f2")
+    for (bad <- Seq(lit(null).cast("double"), lit(Double.NaN))) {
+      // in the fit head: the fit itself fails, naming the column
+      val inHead = small.withColumn("f1", when(col("id") === 3L, bad).otherwise(col("f1")))
+      val e = intercept[IllegalArgumentException](
+        Reduction.pcaFitTransformOnHead(inHead, feats, 2, 10, "id"))
+      assert(e.getMessage.contains("f1"))
+      intercept[Exception](mllibPca(inHead, feats, 2, 10, "id"))
+      // outside the fit head: the transform's action fails
+      val late = small.withColumn("f1", when(col("id") === 25L, bad).otherwise(col("f1")))
+      val (reduced, _) = Reduction.pcaFitTransformOnHead(late, feats, 2, 10, "id")
+      intercept[Exception](reduced.select("pc_0").collect())
+      intercept[Exception](mllibPca(late, feats, 2, 10, "id")._2.collect())
+    }
   }
 
   test("tuneReduction returns a best-first leaderboard over k") {

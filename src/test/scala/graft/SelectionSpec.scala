@@ -59,6 +59,51 @@ class SelectionSpec extends AnyFunSuite {
     }
   }
 
+  // the per-fold variant relation MDA used before the single-branch
+  // form: a union of features+1 projections (reference code only; its
+  // base branch read the fold's test frame, whose rows `permuted`
+  // carries one-to-one)
+  private def unionVariants(permuted: org.apache.spark.sql.DataFrame, cols: Seq[String],
+                            featCols: Seq[String]): org.apache.spark.sql.DataFrame =
+    (("__base__", permuted.select(cols.map(col): _*)) +: featCols.map { ft =>
+      ft -> permuted.select(cols.map(c =>
+        if (c == ft) col(s"${ft}_perm").as(ft) else col(c)): _*)
+    }).map { case (tag, fr) => fr.withColumn("graft_feat", lit(tag)) }
+      .reduce(_ unionByName _)
+
+  test("MDA variant relation equals the old union form as a multiset") {
+    val feats = Seq("f_good", "f_noise")
+    val test = df.filter(col("era") < 3)
+    val permuted = graft.operators.Folds.permuteManyWithinEra(test, feats, "era",
+      Seq("id"), xxhash64(col("id"), lit(5L)))
+    val single = FeatureSelection.variants(permuted, test.columns.toSeq, feats)
+    val union = unionVariants(permuted, test.columns.toSeq, feats)
+    assert(single.columns.toSeq == union.columns.toSeq)
+    assert(single.count() == 3 * test.count())
+    assert(single.exceptAll(union).isEmpty && union.exceptAll(single).isEmpty)
+    // one branch: no Union operator left in the plan
+    assert(!single.queryExecution.optimizedPlan.exists(
+      _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Union]))
+  }
+
+  test("MDA importances equal the old union form's on the fixture") {
+    val feats = Seq("f_good", "f_noise")
+    def run(v: (org.apache.spark.sql.DataFrame, Seq[String], Seq[String]) =>
+        org.apache.spark.sql.DataFrame) =
+      FeatureSelection.mdaWith(v)(df, "era", feats, "target", Seq("id"), 2, 5L,
+        meanFitter(feats), None).collect().toSeq
+    val now = run(FeatureSelection.variants)
+    assert(now == run(unionVariants))
+    assert(now.length == 2)
+  }
+
+  test("MDA releases everything it persists") {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    FeatureSelection.mda(df, "era", Seq("f_good", "f_noise"), "target", Seq("id"),
+      k = 2, seed = 5, fit = meanFitter(Seq("f_good", "f_noise"))).collect()
+    assert(spark.sparkContext.getPersistentRDDs.keySet == before)
+  }
+
   test("kfoldScores: informative model scores higher than noise model") {
     def scoreOf(feats: Seq[String]): Double =
       CrossVal.kfoldScores(df, "era", 3, meanFitter(feats),
